@@ -33,6 +33,13 @@ Layout
 - ``ocr_spark.decontam``    eval-set n-gram decontamination.
 - ``ocr_spark.streaming`` / ``ocr_spark.ingest``  structured-streaming
   operators and exactly-once dedup/extraction ingest.
+- ``ocr_spark.pyworker``    keeps Python workers from re-reading zip
+  archives on every task; installed here, because unpickling any of the
+  package's worker-side functions imports the package.
 """
+
+from ocr_spark import pyworker as _pyworker
+
+_pyworker.install()
 
 __version__ = "0.1.0"

@@ -58,6 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType
 
 from ocr_spark.similarity import hashed_token_sums
 
@@ -321,8 +322,15 @@ def quality_probe(
     repeatedly should build :func:`probe_features` themselves, persist,
     and drive :func:`train_linear_probe` / :func:`score_linear_probe`
     directly (the shape ``jobs/run_curation.py`` uses)."""
+    # the RAW label rides into training, which validates it before its
+    # own bigint cast: casting here would truncate a 0.7 to a "valid" 0.
+    # Only a boolean is cast first — losslessly (NULL stays NULL), and
+    # IN (0, 1) rejects a boolean at analysis.
+    labeled = docs.withColumn("y", label_expr)
+    if isinstance(labeled.schema["y"].dataType, BooleanType):
+        labeled = labeled.withColumn("y", F.col("y").cast("bigint"))
     feats = probe_features(
-        docs.withColumn("y", label_expr.cast("bigint")),
+        labeled,
         text_col=text_col, id_col=id_col, dims=dims, carry=("y",),
     ).persist()
     try:

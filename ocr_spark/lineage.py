@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -182,21 +183,28 @@ def run_resumable(
     )
     docs_out = {int(r.bucket): int(r.docs_out) for r in docs_out_rows}
     bytes_out = _bucket_dir_bytes(spark, out_dir, pending_ids)
+    # An Arrow table reaches the JVM as record batches, so the commit
+    # starts no Python task (a row list would go through a parallelized
+    # Python RDD); coalesce(1) appends one lineage file per commit.
+    n = len(pending_ids)
     lineage = spark.createDataFrame(
-        [
-            (run_id, int(r.bucket), n_buckets, int(r.docs_in),
-             docs_out.get(int(r.bucket), 0),
-             bytes_out.get(int(r.bucket), 0), wall_ms, "done")
-            for r in docs_in_rows
-        ],
+        pa.table({
+            "run_id": [run_id] * n,
+            "bucket": pending_ids,
+            "n_buckets": [n_buckets] * n,
+            "docs_in": [int(r.docs_in) for r in docs_in_rows],
+            "docs_out": [docs_out.get(b, 0) for b in pending_ids],
+            "bytes_out": [bytes_out.get(b, 0) for b in pending_ids],
+            "wall_ms": [wall_ms] * n,
+            "status": ["done"] * n,
+        }),
         schema=LINEAGE_SCHEMA,
     )
-    lineage.write.mode("append").parquet(lineage_dir)
+    lineage.coalesce(1).write.mode("append").parquet(lineage_dir)
 
-    n_pending = len(docs_in_rows)
     return {
         "run_id": run_id,
         "skipped_buckets": len(skip),
-        "processed_buckets": n_pending,
+        "processed_buckets": n,
         "wall_ms": wall_ms,
     }

@@ -271,3 +271,17 @@ def test_encode_unknown_piece_fails_loudly(spark):
     vocab = bpe_vocab(other, [])
     with pytest.raises(Exception, match="missing from the vocab"):
         bpe_encode(docs, [], vocab).collect()
+
+
+def test_encode_unknown_piece_guards_every_column(spark):
+    """Each output column carries the guard: selecting ``piece_ids`` or
+    ``n_tokens`` alone (pruning the other) must still raise, never turn
+    unknown pieces into NULL ids."""
+    from ocr_spark.bpe import bpe_encode, bpe_vocab
+
+    docs = _df(spark, [(1, "ab ab")], "doc_id bigint, text string")
+    other = _df(spark, [(2, "xy")], "doc_id bigint, text string")
+    encoded = bpe_encode(docs, [], bpe_vocab(other, []))
+    for col in ("piece_ids", "n_tokens"):
+        with pytest.raises(Exception, match="missing from the vocab"):
+            encoded.select("id", col).collect()

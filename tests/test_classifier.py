@@ -177,6 +177,22 @@ def test_fractional_labels_fail_fast(spark):
         )
 
 
+def test_quality_probe_validates_the_raw_label(spark):
+    """quality_probe hands training the label UNCAST: a 0.7 must raise
+    instead of truncating to a 'valid' 0, while a boolean label (the
+    contract row's shape) still trains."""
+    docs = _df(spark, [(1, "a b", 0.7), (2, "c d", 0.0)],
+               "doc_id bigint, text string, y double")
+    with pytest.raises(ValueError, match="must be 0/1"):
+        quality_probe(docs, F.col("y"), dims=DIMS, iters=2)
+    scored = quality_probe(docs, F.col("y") > F.lit(0.5), dims=DIMS,
+                           iters=2)
+    assert scored.count() == 2
+    with pytest.raises(ValueError, match="must be 0/1"):
+        quality_probe(docs, F.when(F.col("y") > 0.5, True), dims=DIMS,
+                      iters=2)
+
+
 def test_model_width_mismatch_raises(spark):
     feats = probe_features(
         _df(spark, [(1, "a b c")], "doc_id bigint, text string"),

@@ -4,7 +4,10 @@ single-shot run exactly."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ocr_spark.config import PipelineConfig
 from ocr_spark.fixtures import corpus_dataframes
@@ -95,3 +98,48 @@ def test_lineage_rows_account_for_all_docs(spark, tmp_path):
     assert sum(r.docs_out for r in rows) == N_DOCS
     assert all(r.status == "done" for r in rows)
     assert all(r.bytes_out > 0 for r in rows if r.docs_out > 0)
+
+
+def _parquet_files(root):
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root)
+        for f in fs if f.endswith(".parquet")
+    )
+
+
+def test_lineage_commit_appends_one_file_of_typed_rows(spark, tmp_path):
+    """Each commit appends exactly one lineage file, whose columns carry
+    LINEAGE_SCHEMA's types and whose rows state what was committed."""
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    spans_df, media_df = _corpus(spark)
+    half = bucket_of(F.col("doc_id"), BUCKETS) < BUCKETS // 2
+
+    s1 = run_resumable(spark, spans_df.filter(half), media_df, out, lin,
+                       "r1", n_buckets=BUCKETS)
+    assert len(_parquet_files(lin)) == 1
+    s2 = run_resumable(spark, spans_df, media_df, out, lin, "r1",
+                       n_buckets=BUCKETS)
+    assert len(_parquet_files(lin)) == 2
+
+    lineage = spark.read.parquet(lin)
+    assert lineage.schema == StructType.fromDDL(LINEAGE_SCHEMA)
+    docs_in = {
+        r.bucket: r["count"] for r in spans_df
+        .groupBy(bucket_of(F.col("doc_id"), BUCKETS).alias("bucket"))
+        .count().collect()
+    }
+    walls = {b: s1["wall_ms"] if b < BUCKETS // 2 else s2["wall_ms"]
+             for b in docs_in}
+    want = sorted(
+        ("r1", b, BUCKETS, n, n,
+         sum(map(os.path.getsize, _parquet_files(f"{out}/bucket={b}"))),
+         walls[b], "done")
+        for b, n in docs_in.items()
+    )
+    got = sorted(
+        (r.run_id, r.bucket, r.n_buckets, r.docs_in, r.docs_out,
+         r.bytes_out, r.wall_ms, r.status)
+        for r in lineage.collect()
+    )
+    assert got == want

@@ -122,3 +122,49 @@ def test_spark_submit_pyfiles_stream_ingest_resume(tmp_path):
         f"read_parquet('{tmp_path}/outp/*/*.parquet')"
     ).fetchone()[0]
     assert n == first["docs_kept"] + second["docs_kept"]
+
+
+_GUARD_JOB = '''
+import json
+
+from pyspark.sql import SparkSession
+
+
+def report(batches):
+    import sys
+
+    import pandas as pd
+
+    from ocr_spark import pyworker
+
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"needed": [sys.version_info < (3, 13)],
+                        "installed": [pyworker.installed()],
+                        "source": [pyworker.__file__]})
+
+
+spark = SparkSession.builder.getOrCreate()
+rows = (spark.range(0, 64, numPartitions=8)
+        .mapInPandas(report, "needed boolean, installed boolean, "
+                             "source string")
+        .collect())
+print(json.dumps({"rows": [r.asDict() for r in rows]}))
+'''
+
+
+def test_spark_submit_pyfiles_installs_worker_guard(tmp_path):
+    """Workers that import ``ocr_spark`` only from the ``--py-files``
+    archive still install the zip-archive guard in every task."""
+    spark_submit = shutil.which("spark-submit")
+    if spark_submit is None:
+        pytest.skip("spark-submit not on PATH")
+    from tools.pyfiles import build_pyfiles_zip
+
+    zip_path = build_pyfiles_zip(str(tmp_path / "ocr_spark.zip"))
+    job = tmp_path / "job.py"
+    job.write_text(_GUARD_JOB)
+    rows = _submit(spark_submit, zip_path, str(job), [], str(tmp_path))["rows"]
+    assert len(rows) == 8
+    assert all(r["installed"] == r["needed"] for r in rows), rows
+    assert all("ocr_spark.zip" in r["source"] for r in rows), rows
