@@ -25,9 +25,6 @@ class PipelineConfig:
       the salted keys is collision-prone (measured 4-of-16 keys landing in
       one partition), so size this ≥ 4× the per-doc parallelism you
       actually need and keep shuffle partitions ≥ 4× salt_buckets.
-    - ``media_partitions`` / ``text_partitions``: the two paths are
-      repartitioned separately (media partitions sized for model batch
-      memory, text partitions for cheap CPU); ``None`` → leave to AQE.
     - ``strip_html``: the boilerplate-strip stage for text spans; turn off
       for the raw-passthrough profile.
     """
@@ -36,8 +33,6 @@ class PipelineConfig:
     ref_year: int = REF_YEAR
     media_time_budget_s: float = 30.0
     salt_buckets: int = 16
-    media_partitions: int | None = None
-    text_partitions: int | None = None
     strip_html: bool = True
     # Fixed sha256 iterations per image for the fake backend (scaling
     # benchmarks emulate real inference cost with it; ~2000 ≈ 1 ms);

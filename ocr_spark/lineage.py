@@ -16,6 +16,16 @@ is `/health` + gunicorn access logs — main.py:1352-1369, entrypoint.sh:25):
   cardinality), and prunes them from the input *before* the heavy stages,
   so a crash loses at most the in-flight buckets' work.
 
+Each lineage count comes from a pass the run makes anyway, so the input is
+scanned twice per run (once per arm of the pipeline's text ∪ media union):
+``docs_in`` (input rows per bucket) is a ``DataFrame.observe`` on the
+pending input inside the pipeline pass; ``docs_out`` and ``bytes_out`` come
+from one read of the committed bucket dirs that projects only the partition
+column and the ``_metadata`` file path and size (no data page is decoded).
+A failed task attempt's observed counts are discarded (checked with tasks
+failing late); whether a map stage recomputed after a fetch failure, or a
+speculative duplicate task, over-counts ``docs_in`` is unverified.
+
 Crash ordering: data first, lineage second.  A crash between the two leaves
 orphan data files for unfinished buckets; the retry overwrites exactly those
 partitions, so the protocol is idempotent.
@@ -24,9 +34,11 @@ partitions, so the protocol is idempotent.
 from __future__ import annotations
 
 import time
+from collections import Counter
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.config import PipelineConfig
@@ -40,25 +52,6 @@ LINEAGE_SCHEMA = (
     "run_id string, bucket int, n_buckets int, docs_in bigint, "
     "docs_out bigint, bytes_out bigint, wall_ms bigint, status string"
 )
-
-
-def _bucket_dir_bytes(
-    spark: SparkSession, out_dir: str, buckets: list[int]
-) -> dict[int, int]:
-    """Committed bytes per bucket partition directory, via the Hadoop
-    FileSystem API (works for file://, hdfs://, s3a://).  One driver-side
-    listing per bucket — bucket-cardinality, not data-cardinality."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    sizes: dict[int, int] = {}
-    for b in buckets:
-        path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/bucket={b}")
-        fs = path.getFileSystem(conf)
-        sizes[b] = (
-            int(fs.getContentSummary(path).getLength())
-            if fs.exists(path) else 0
-        )
-    return sizes
 
 
 def bucket_of(doc_id, n_buckets: int):
@@ -113,6 +106,8 @@ def run_resumable(
 ) -> dict:
     """One (re)run: process every bucket not yet 'done', commit data, then
     commit lineage.  Returns a summary dict for logging/tests."""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
     cfg = cfg or PipelineConfig()
     skip = done_buckets(spark, lineage_dir, run_id, n_buckets)
     if len(skip) >= n_buckets:
@@ -120,29 +115,21 @@ def run_resumable(
         return {"run_id": run_id, "skipped_buckets": len(skip),
                 "processed_buckets": 0, "wall_ms": 0}
 
-    pending = spans_df.withColumn(
-        "bucket", bucket_of(F.col("doc_id"), n_buckets)
-    )
+    bucket = bucket_of(F.col("doc_id"), n_buckets)
+    pending = spans_df.withColumn("bucket", bucket)
     if skip:
         pending = pending.filter(~F.col("bucket").isin(skip))
-    # Collected once (bucket-cardinality rows): reused as the emptiness
-    # probe, the lineage rows, AND the summary — one input pass total.
-    # (A separate isEmpty() probe used to cost a FULL extra scan of the
-    # pending input per run; at 100 TB that is a whole table read spent
-    # proving non-emptiness the docs_in count proves anyway.)
-    docs_in_rows = (
-        pending.groupBy("bucket").agg(F.count(F.lit(1)).alias("docs_in"))
-        .collect()
-    )
-    # Nothing pending (fully-committed rerun with sparse buckets, or an
-    # empty input on a fresh run): writing and reading back an all-empty
-    # partitioned dataset would fail on schema inference — exit first.
-    if not docs_in_rows:
-        return {"run_id": run_id, "skipped_buckets": len(skip),
-                "processed_buckets": 0, "wall_ms": 0}
+    # Both union arms read `pending`, and each arm's copy of the observation
+    # counts every pending row; Spark reports one value per observation, so
+    # the counts are not doubled.
+    observed = Observation()
+    pending = pending.observe(observed, *(
+        F.count_if(F.col("bucket") == b).alias(str(b))
+        for b in sorted(set(range(n_buckets)) - set(skip))
+    ))
     started = time.monotonic()
     out = run_extraction(spark, pending.drop("bucket"), media_df, cfg)
-    out = out.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+    out = out.withColumn("bucket", bucket)
 
     # Data commit: dynamic partition overwrite replaces exactly the buckets
     # this run touched (idempotent retry), never the already-done ones.
@@ -162,39 +149,47 @@ def run_resumable(
     )
     wall_ms = int((time.monotonic() - started) * 1000)
 
-    # Lineage commit (after data): stats reflect what was actually
-    # committed, gathered cheaply —
-    # - docs_out: partition-pruned read of ONLY this run's bucket dirs,
-    #   projecting just the partition column, so the counts come from
-    #   parquet row-group metadata (no data pages are decoded);
-    # - bytes_out: the bucket partition directory's committed file bytes
-    #   from the filesystem.
-    # This replaces the old full re-read + to_json re-serialization of
-    # every document (a second full pass over the sink, roughly doubling
-    # sink-side cost at scale, for a metrics column).
-    pending_ids = [int(r.bucket) for r in docs_in_rows]
-    docs_out_rows = (
+    try:
+        counts = observed.get
+    except Py4JJavaError:
+        # Adaptive execution replaces a stage whose output is empty by an
+        # empty relation and drops its observed metrics with it, so an
+        # empty pending input reports no metrics at all.
+        counts = {}
+    docs_in = {int(b): n for b, n in counts.items() if n}
+    if not docs_in:
+        # Nothing pending (an empty input, or a fully committed rerun with
+        # sparse buckets): the empty write committed nothing to read back.
+        return {"run_id": run_id, "skipped_buckets": len(skip),
+                "processed_buckets": 0, "wall_ms": wall_ms}
+
+    # Lineage commit (after data): docs_out and bytes_out state what was
+    # actually committed.  The partition filter prunes the read to this
+    # run's bucket dirs; one row per committed file (bucket cardinality)
+    # is collected, so each file's size is counted once.
+    ids = sorted(docs_in)
+    docs_out, bytes_out = Counter(), Counter()
+    for r in (
         spark.read.parquet(out_dir)
-        .select(F.col("bucket").cast("int").alias("bucket"))
-        .filter(F.col("bucket").isin(pending_ids))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("docs_out"))
+        .filter(F.col("bucket").isin(ids))
+        .groupBy("bucket", "_metadata.file_path", "_metadata.file_size")
+        .count()
         .collect()
-    )
-    docs_out = {int(r.bucket): int(r.docs_out) for r in docs_out_rows}
-    bytes_out = _bucket_dir_bytes(spark, out_dir, pending_ids)
+    ):
+        docs_out[r.bucket] += r["count"]
+        bytes_out[r.bucket] += r.file_size
     # An Arrow table reaches the JVM as record batches, so the commit
     # starts no Python task (a row list would go through a parallelized
     # Python RDD); coalesce(1) appends one lineage file per commit.
-    n = len(pending_ids)
+    n = len(ids)
     lineage = spark.createDataFrame(
         pa.table({
             "run_id": [run_id] * n,
-            "bucket": pending_ids,
+            "bucket": ids,
             "n_buckets": [n_buckets] * n,
-            "docs_in": [int(r.docs_in) for r in docs_in_rows],
-            "docs_out": [docs_out.get(b, 0) for b in pending_ids],
-            "bytes_out": [bytes_out.get(b, 0) for b in pending_ids],
+            "docs_in": [docs_in[b] for b in ids],
+            "docs_out": [docs_out[b] for b in ids],
+            "bytes_out": [bytes_out[b] for b in ids],
             "wall_ms": [wall_ms] * n,
             "status": ["done"] * n,
         }),

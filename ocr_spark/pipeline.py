@@ -140,8 +140,6 @@ def text_path(exploded: DataFrame, cfg: PipelineConfig) -> DataFrame:
     ``when`` guard) and null-in → null-out is a no-op row for the Arrow
     batch."""
     rows = exploded.filter(F.col("kind").isNull() | (F.col("kind") != "media"))
-    if cfg.text_partitions:
-        rows = rows.repartition(cfg.text_partitions, "doc_id", "offset")
     is_text = F.col("kind") == "text"  # null kind ⇒ false, like the filter
     text_in = F.when(is_text, F.col("text"))
     out_text = strip_boilerplate_udf(text_in) if cfg.strip_html else text_in
@@ -170,8 +168,8 @@ def text_path(exploded: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def _pinned_media_partitions(spark) -> int:
-    """Width for the number-pinned media exchange when the caller gave
-    no explicit ``media_partitions``: the session's shuffle parallelism.
+    """Width for the number-pinned media exchange: the session's shuffle
+    parallelism.
     Vendor platforms may set ``spark.sql.shuffle.partitions`` to a
     non-numeric value (e.g. "auto" under auto-optimized shuffle — stock
     Spark rejects it at set time, forks accept it), and failing
@@ -206,11 +204,8 @@ def media_path(
     # how many executors exist).  At production scale the same mis-sizing
     # holds — an 8 MB partition of media refs can be hours of OCR — so
     # the CPU-heavy stage's width comes from the session's shuffle
-    # parallelism (or the caller's explicit media_partitions), never from
-    # AQE's byte heuristic.
-    n_media = cfg.media_partitions or _pinned_media_partitions(
-        media.sparkSession
-    )
+    # parallelism, never from AQE's byte heuristic.
+    n_media = _pinned_media_partitions(media.sparkSession)
     media = media.repartition(n_media, F.col("doc_id"), salt)
 
     ocr = media.mapInPandas(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -143,3 +144,94 @@ def test_lineage_commit_appends_one_file_of_typed_rows(spark, tmp_path):
         for r in lineage.collect()
     )
     assert got == want
+
+
+def test_run_resumable_rejects_bucket_counts_below_one(spark, tmp_path):
+    spans_df, media_df = _corpus(spark)
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_resumable(spark, spans_df, media_df, str(tmp_path / "out"),
+                          str(tmp_path / "lineage"), "r1", n_buckets=n)
+    assert not os.path.exists(tmp_path / "out")
+
+
+def test_nothing_pending_commits_no_lineage_then_a_real_run_does(
+    spark, tmp_path
+):
+    """An empty input, then a fully committed rerun of a sparse input (10
+    docs over 64 buckets, so most buckets never get a lineage row), each
+    process nothing and append no lineage row; a non-empty run between
+    them commits into the same directories."""
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    spans_df, media_df = corpus_dataframes(spark, seed=SEED, n_docs=10)
+
+    empty = run_resumable(spark, spans_df.limit(0), media_df, out, lin,
+                          "r1", n_buckets=64)
+    assert empty["processed_buckets"] == 0
+    assert _parquet_files(lin) == []
+
+    first = run_resumable(spark, spans_df, media_df, out, lin, "r1",
+                          n_buckets=64)
+    n_buckets_hit = spans_df.select(
+        bucket_of(F.col("doc_id"), 64)).distinct().count()
+    assert first["processed_buckets"] == n_buckets_hit < 64
+    rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lin).collect()
+    assert len(rows) == n_buckets_hit
+    assert sum(r.docs_in for r in rows) == sum(r.docs_out for r in rows) == 10
+    assert spark.read.parquet(out).count() == 10
+
+    rerun = run_resumable(spark, spans_df, media_df, out, lin, "r1",
+                          n_buckets=64)
+    assert rerun["skipped_buckets"] == n_buckets_hit
+    assert rerun["processed_buckets"] == 0
+    assert len(_parquet_files(lin)) == 1
+    assert spark.read.parquet(out).count() == 10
+
+
+def test_lineage_counts_input_rows_in_and_distinct_docs_out(spark, tmp_path):
+    """A doc_id repeated in the input is one input row more in docs_in
+    but one document in docs_out (the splice groups by doc_id)."""
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    spans_df, media_df = _corpus(spark)
+    first_id = spans_df.first().doc_id
+    doubled = spans_df.unionByName(spans_df.filter(F.col("doc_id") == first_id))
+    run_resumable(spark, doubled, media_df, out, lin, "r1", n_buckets=BUCKETS)
+
+    bucket = bucket_of(F.col("doc_id"), BUCKETS).alias("bucket")
+    rows_in = {r.bucket: r["count"]
+               for r in doubled.groupBy(bucket).count().collect()}
+    docs = {r.bucket: r["count"] for r in
+            doubled.select("doc_id").distinct().groupBy(bucket).count()
+            .collect()}
+    got = {r.bucket: (r.docs_in, r.docs_out) for r in
+           spark.read.schema(LINEAGE_SCHEMA).parquet(lin).collect()}
+    assert got == {b: (rows_in[b], docs[b]) for b in rows_in}
+    assert sum(n for n, _ in got.values()) == N_DOCS + 1
+    assert sum(n for _, n in got.values()) == N_DOCS
+
+
+def test_run_resumable_scans_its_input_exactly_twice(spark, tmp_path):
+    """The pipeline's two union arms are the only input passes: the
+    lineage counts ride on them and on the committed files' metadata."""
+    from perfbench.ledger import StatusStore
+
+    spans_df, media_df = _corpus(spark)
+    spans_path = str(tmp_path / "spans_in")
+    spans_df.write.parquet(spans_path)
+    store = StatusStore(spark)
+    # a scan's description abbreviates its location past this length
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    try:
+        mark = store.mark()
+        run_resumable(spark, spark.read.parquet(spans_path), media_df,
+                      str(tmp_path / "out"), str(tmp_path / "lineage"), "r1",
+                      n_buckets=BUCKETS)
+        execs = store.since(mark)
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    loc = os.path.abspath(spans_path)
+    scans = sum(1 for ex in execs for n in ex.nodes
+                if n.name.startswith("Scan parquet") and loc in n.desc)
+    assert scans == 2
