@@ -212,26 +212,53 @@ def test_lineage_counts_input_rows_in_and_distinct_docs_out(spark, tmp_path):
     assert sum(n for _, n in got.values()) == N_DOCS
 
 
-def test_run_resumable_scans_its_input_exactly_twice(spark, tmp_path):
-    """The pipeline's two union arms are the only input passes: the
-    lineage counts ride on them and on the committed files' metadata."""
+def test_lineage_counts_without_partition_type_inference(spark, tmp_path):
+    """With partition type inference off, the sink's bucket column reads
+    back as a string; docs_out and bytes_out must still find their bucket."""
+    spans_df, media_df = _corpus(spark)
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(key, "false")
+    try:
+        run_resumable(spark, spans_df, media_df, str(tmp_path / "out"),
+                      str(tmp_path / "lineage"), "r1", n_buckets=BUCKETS)
+    finally:
+        spark.conf.unset(key)
+    rows = spark.read.schema(LINEAGE_SCHEMA).parquet(
+        str(tmp_path / "lineage")).collect()
+    assert sum(r.docs_out for r in rows) == N_DOCS
+    assert all(r.docs_out == r.docs_in and r.bytes_out > 0 for r in rows)
+
+
+def test_lineage_counts_read_no_data_beyond_doc_id(spark, tmp_path):
+    """The lineage counts add one input pass that reads only doc_id to the
+    pipeline's two, and one read of the sink that decodes no data column
+    (docs_out and bytes_out come from file metadata)."""
     from perfbench.ledger import StatusStore
 
     spans_df, media_df = _corpus(spark)
     spans_path = str(tmp_path / "spans_in")
     spans_df.write.parquet(spans_path)
+    out = str(tmp_path / "out")
     store = StatusStore(spark)
     # a scan's description abbreviates its location past this length
     spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
     try:
         mark = store.mark()
         run_resumable(spark, spark.read.parquet(spans_path), media_df,
-                      str(tmp_path / "out"), str(tmp_path / "lineage"), "r1",
+                      out, str(tmp_path / "lineage"), "r1",
                       n_buckets=BUCKETS)
         execs = store.since(mark)
     finally:
         spark.conf.unset("spark.sql.maxMetadataStringLength")
-    loc = os.path.abspath(spans_path)
-    scans = sum(1 for ex in execs for n in ex.nodes
-                if n.name.startswith("Scan parquet") and loc in n.desc)
-    assert scans == 2
+
+    def scans(path):
+        loc = os.path.abspath(path)
+        return [n.desc for ex in execs for n in ex.nodes
+                if n.name.startswith("Scan parquet") and loc in n.desc]
+
+    spans_scans = scans(spans_path)
+    assert len(spans_scans) == 3
+    assert sum("ReadSchema: struct<doc_id:string>" in d
+               for d in spans_scans) == 1
+    (sink_scan,) = scans(out)
+    assert "ReadSchema: struct<>" in sink_scan

@@ -86,8 +86,8 @@ def _run(spark, F, corpus_dataframes_distributed, run_resumable,
         "n_docs": args.n_docs,
         "wall_s": round(wall, 1),
         # extraction+data-commit only (run_resumable's own clock) — the
-        # difference to wall_s is the resume check, the committed-file
-        # metadata read and the lineage commit
+        # difference to wall_s is the resume check, the per-bucket input
+        # count, the committed-file metadata read and the lineage commit
         "pipeline_wall_s": round(summary["wall_ms"] / 1000, 1),
         "docs_per_sec": round(args.n_docs / wall, 1),
         "buckets": int(agg["n_buckets"]),
